@@ -69,7 +69,11 @@ object Absorb {
     *    table's key column every batch (the round-6 O(corpus)-per-batch
     *    residual). Spec contract: ≡ recomputing the census from the
     *    table at any batch boundary;
-    *  - `batches`: absorbed-batch count (drives norm compaction). */
+    *  - `batches`: absorbed-batch count (drives norm compaction).
+    * A Standing is consumed by the next [[absorb]]: that call releases
+    * its `labels` and `census` checkpoint blocks (and, on a compaction
+    * batch, its `norm` checkpoint), so only the newest Standing stays
+    * readable. */
   final case class Standing(table: String, norm: DataFrame, labels: DataFrame,
       census: DataFrame, batches: Int = 0)
 
@@ -95,7 +99,9 @@ object Absorb {
   /** Per-batch absorb output: the advanced standing state, this
     * batch's accepted edges (canonical id_a < id_b, code, score), and
     * the lazily-evaluated component-size histogram of the updated
-    * labels (the over-merge monitor). */
+    * labels (the over-merge monitor). Absorbing the next batch into
+    * `standing` releases this result's label and census blocks:
+    * `componentStats` and `standing.labels` must be read before then. */
   final case class BatchResult(standing: Standing, newEdges: DataFrame,
       componentStats: DataFrame)
 
@@ -149,7 +155,6 @@ object Absorb {
   def absorb(spark: SparkSession, st: Standing, incNorm: DataFrame,
       cfg: Pipeline.Config = Pipeline.Config(),
       monitor: Boolean = true): BatchResult = {
-    Pipeline.assertStandingBucketed(spark, st.table)
     // phase labels (guide §1.5): every job this batch runs is tagged,
     // so the UI — and the AbsorbBytes probe's listener — can attribute
     // wall/shuffle/input bytes to census vs pairs vs hydration vs
@@ -158,7 +163,8 @@ object Absorb {
       spark.sparkContext.setJobDescription(s"absorb: $name")
       try f finally spark.sparkContext.setJobDescription(null)
     }
-    val keyedInc = Pipeline.incrementKeyed(incNorm).persist()
+    val keyedInc = Pipeline.withBlockingKeys(incNorm)
+      .select("id", "key", "nosuffix").persist()
     try {
       // COMBINED standing+increment census for the runaway drop — the
       // exact census the one-shot path would compute over the union
@@ -167,8 +173,10 @@ object Absorb {
       // advanced by the increment's O(increment) census delta: the
       // per-batch O(corpus) standing-table key scan is gone, and the
       // crossed-the-bound monitor reads the same join instead of a
-      // second scan. The checkpointed census preserves its hash
-      // partitioning on `key`, so only the increment side exchanges.
+      // second scan. The checkpoint does NOT keep the census's hash
+      // partitioning (eagerNoStats rebuilds the frame with unknown
+      // partitioning), so the full outer join re-shuffles the
+      // O(keys) standing census every batch, next to the increment's.
       val incCensus = keyedInc.groupBy("key").agg(count(lit(1)).as("n_i"))
       val newCensus = phase("census")(eager(st.census
         .withColumnRenamed("n", "n_s")
@@ -177,8 +185,8 @@ object Absorb {
           (coalesce(col("n_s"), lit(0L)) + coalesce(col("n_i"), lit(0L)))
             .as("n"),
           coalesce(col("n_s"), lit(0L)).as("n_prev")), cfg))
-      val runaway = newCensus.where(col("n") > cfg.runawayBlockSize)
-        .select("key")
+      val runaway = Pipeline.tiers(Pipeline.selfCensus(
+        newCensus.select(col("key"), col("n").as("block_size"))), cfg).runaway
       // a key crossing the runaway bound THIS batch had standing pairs
       // emitted in earlier batches that the one-shot path would drop —
       // log it (see the class-level divergence note). Reads the
@@ -200,10 +208,8 @@ object Absorb {
           runawayKeys = Some(runaway))
         .select(least(col("id_a"), col("id_b")).as("id_a"),
           greatest(col("id_a"), col("id_b")).as("id_b"))
-      val selfKeyed = keyedInc
-        .select(col("id_a").as("id"), col("key"), col("nos_a").as("nosuffix"))
-        .join(broadcast(runaway), Seq("key"), "left_anti")
-      val selfPairs = Pipeline.candidatePairsSelf(selfKeyed, cfg,
+      val selfPairs = Pipeline.candidatePairsSelf(
+        keyedInc.join(broadcast(runaway), Seq("key"), "left_anti"), cfg,
         cacheKeyed = false, earlyFilter = true)
       // disjoint by construction (cross pairs have exactly one standing
       // endpoint; self pairs have none) and each internally deduped.
@@ -234,9 +240,7 @@ object Absorb {
       // advance the durable bucketed table LAST (after the batch's
       // edges/labels materialized): one increment-sized exchange,
       // corpus files untouched
-      phase("append")(BucketedKeyTable.append(spark, st.table,
-        keyedInc.select(col("id_a").as("id"), col("key"),
-          col("nos_a").as("nosuffix"))))
+      phase("append")(BucketedKeyTable.append(spark, st.table, keyedInc))
       val stats = ConnectedComponents.componentStats(labels)
       if (monitor) {
         // the production over-merge monitor, per increment: a fat tail

@@ -20,12 +20,21 @@ import graft.pages.Extract
   *    distinct names ≪ mentions;
   *  - candidate generation is an equi-join on exploded blocking keys,
   *    never a cross product; pair dedup keys on (idA, idB);
-  *  - oversized blocks (stop-word-like keys) are SALT-SPLIT into
-  *    bounded (key, salt) sub-blocks so every pair is still scored
-  *    (matcher.py:381-396 scores every pair) without any task
-  *    materializing a whole hot block; only runaway blocks above a
-  *    hard bound are dropped, counted, and logged — never silently;
-  *    AQE skew-join remains on as the second line of defense;
+  *  - the blocking join is TIERED by an in-plan key census (each join
+  *    side's block size per key; a self join counts its one table,
+  *    mention-weighted, for both — [[blockSizes]]), a policy written
+  *    once ([[tiers]]) and run by one join core ([[tieredPairs]]):
+  *    keys ≤ maxBlockSize on both sides take the plain SHUFFLE_HASH
+  *    join; a key above it on either side is SALT-SPLIT on a 2-D grid
+  *    of (key, salt_m, salt_b) cells, so every pair is still scored
+  *    (matcher.py:381-396) with per-task work ≤ maxBlockSize² — the
+  *    north rule's "top-key splitting"; a key whose base-side block
+  *    exceeds runawayBlockSize is dropped, counted and logged, never
+  *    silently (big main-side keys are real data). The one exception
+  *    is [[incrementalPairs]]: its bucketed standing side must never
+  *    shuffle, so only keys hot IN THE INCREMENT go to the grid and
+  *    cold keys join bucket-locally. AQE skew-join remains on as the
+  *    second line of defense;
   *  - the cheap token_set_ratio prefilter (cutoff 50, matcher.py:33)
   *    runs before the cascade inside the same codegen stage, so >90%
   *    of candidates never reach the 230-rule scorer.
@@ -134,6 +143,30 @@ object Pipeline {
       keyed.groupBy("key").agg(sum(col("w")).as("block_size"))
     else keyed.groupBy("key").agg(count(lit(1)).as("block_size"))
 
+  /** A self join's census (key, bs_a, bs_b): one table's [[blockSizes]]
+    * on both sides. */
+  private[pipeline] def selfCensus(sizes: DataFrame): DataFrame =
+    sizes.select(col("key"), col("block_size").as("bs_a"),
+      col("block_size").as("bs_b"))
+
+  /** The tier policy of the [[Pipeline]] scaladoc — the only place block
+    * sizes meet the bounds. `census` is (key, bs_a, bs_b), each join
+    * side's block size per key (0 where a side lacks it); `grid` holds
+    * the salt counts nm = ceil(bs_a / cap), nb = ceil(bs_b / cap). */
+  private[pipeline] final case class Tiers(oversize: DataFrame,
+      runaway: DataFrame, grid: DataFrame)
+  private[pipeline] def tiers(census: DataFrame, cfg: Config): Tiers = {
+    val cap = cfg.maxBlockSize
+    val over = col("bs_a") > cap || col("bs_b") > cap
+    def salts(bs: String): Column = ceil(col(bs).cast("double") / cap).cast("long")
+    Tiers(
+      census.where(over).select("key"),
+      census.where(col("bs_b") > cfg.runawayBlockSize).select("key"),
+      census.where(over && col("bs_a") > 0 && col("bs_b") > 0 &&
+          col("bs_b") <= cfg.runawayBlockSize)
+        .select(col("key"), salts("bs_a").as("nm"), salts("bs_b").as("nb")))
+  }
+
   /** ids appearing in ≥1 block NOT dropped by the runaway bound — the
     * exact vertex set whose (self-)pairs the blocking join can
     * generate. [[mentionComponents]] gates self-accept contraction on
@@ -144,106 +177,90 @@ object Pipeline {
     * few by construction → broadcast anti-join. */
   def keptBlockIds(keyed: DataFrame, cfg: Config): DataFrame =
     keyed
-      .join(broadcast(blockSizes(keyed)
-        .where(col("block_size") > cfg.runawayBlockSize).select("key")),
+      .join(broadcast(tiers(selfCensus(blockSizes(keyed)), cfg).runaway),
         Seq("key"), "left_anti")
       .select("id").distinct()
 
   private def maybeBroadcast(df: DataFrame, cfg: Config): DataFrame =
     if (cfg.broadcastNames) broadcast(df) else df
 
-  /** Hot-key census with the per-key salt count: keys in
-    * (maxBlockSize, runawayBlockSize] are salted into
-    * nsalt = ceil(block_size / maxBlockSize) sub-blocks; keys above
-    * the runaway bound are dropped (logged via the observe deltas). */
-  private def saltPlan(sizes: DataFrame, cfg: Config): DataFrame =
-    sizes
-      .where(col("block_size") > cfg.maxBlockSize &&
-        col("block_size") <= cfg.runawayBlockSize)
-      .withColumn("nsalt",
-        ceil(col("block_size").cast("double") / cfg.maxBlockSize).cast("long"))
-      .select("key", "nsalt")
-
-  /** Distinct (id_a, id_b) self-pairs from a keyed table (id, key) —
-    * the in-plan blocking join, exposed for spec-level recall proofs.
-    *
-    * Three key tiers (census is in-plan, no driver action):
-    *  - block_size ≤ maxBlockSize: plain SHUFFLE_HASH self-join on key;
-    *  - maxBlockSize < block_size ≤ runawayBlockSize: 2-D GRID SALT —
-    *    each side is salted by its own hash and replicated across the
-    *    other axis; the join runs on (key, salt_m, salt_b): every pair
-    *    of the hot block is still produced exactly once (the reference
-    *    scores every pair, matcher.py:381-396), with per-task work
-    *    bounded by maxBlockSize² regardless of block size — the
-    *    "top-key splitting" of the north rule;
-    *  - block_size > runawayBlockSize: dropped, counted, logged.
-    *
-    * With `earlyFilter` the keyed table must also carry `nosuffix` and
-    * the cheap token_set_ratio prefilter runs INSIDE each tier's join,
-    * before the pair-dedup `distinct()` — see [[edgeCandidatesSelf]]
-    * for why that ordering is the 100 TB shape.
-    */
-  def candidatePairsSelf(keyed0: DataFrame, cfg: Config = Config(),
-      cacheKeyed: Boolean = true, earlyFilter: Boolean = false): DataFrame = {
-    // the keyed table is consumed ~6× below (census for the anti-join,
-    // census for the salt plan, both small-join sides, the hot join's
-    // two sides) and each uncached scan re-evaluates the blocking_keys
-    // explode (double-metaphone + minhash per row — the expensive
-    // part). (id, key) rows are ~30 bytes: persist them once. Callers
-    // that rebuild per micro-batch pass cacheKeyed = false and manage
-    // caching themselves (a per-batch CacheManager entry never
-    // released would grow without bound).
-    val keyed = if (cacheKeyed) keyed0.persist() else keyed0
-    val sizes = blockSizes(keyed)
-    val oversize = sizes.where(col("block_size") > cfg.maxBlockSize)
-    val small = keyed.join(broadcast(oversize.select("key")), Seq("key"), "left_anti")
-      .observe("graft_capped_rows", count(lit(1)).as("rows_kept"))
-    def sideA(df: DataFrame, extra: Column*): DataFrame =
-      if (earlyFilter)
-        df.select(Seq(col("key"), col("id").as("id_a"),
-          col("nosuffix").as("nos_a")) ++ extra: _*)
-      else df.select(Seq(col("key"), col("id").as("id_a")) ++ extra: _*)
-    def sideB(df: DataFrame, extra: Column*): DataFrame =
-      if (earlyFilter)
-        df.select(Seq(col("key"), col("id").as("id_b"),
-          col("nosuffix").as("nos_b")) ++ extra: _*)
-      else df.select(Seq(col("key"), col("id").as("id_b")) ++ extra: _*)
-    val keep =
-      if (earlyFilter)
-        col("id_a") < col("id_b") &&
-          gf.prefilter_pass(col("nos_a"), col("nos_b"), cfg.cutoff)
-      else col("id_a") < col("id_b")
+  /** The blocking join's one implementation: (id_a, id_b) pairs of `a` ×
+    * `b` through the [[tiers]] of `census`, NOT deduped (each caller
+    * dedups once over all it unions). A self join runs over
+    * `(keyed, keyed)`: its (id, key[, nosuffix]) table is renamed per
+    * side, the plain tier reads one shared input, and `id_a < id_b`
+    * keeps one orientation per pair. Two-sided inputs (key, id_a, …) ×
+    * (key, id_b, …) pass through whole. With `earlyFilter` the cheap
+    * prefilter runs INSIDE each tier's join, before the pair dedup —
+    * see [[edgeCandidatesSelf]] for why that is the 100 TB shape. */
+  private def tieredPairs(a: DataFrame, b: DataFrame, census: DataFrame,
+      cfg: Config, earlyFilter: Boolean, self: Boolean): DataFrame = {
+    val t = tiers(census, cfg)
+    def own(s: String): Seq[Column] =
+      if (self) col("id").as(s"id_$s") +:
+        (if (earlyFilter) Seq(col("nosuffix").as(s"nos_$s")) else Nil)
+      else (if (s == "a") a else b).columns.toSeq.filter(_ != "key").map(col)
+    def side(df: DataFrame, s: String, extra: Column*): DataFrame =
+      df.select((col("key") +: own(s)) ++ extra: _*)
+    val keep = (Option.when(self)(col("id_a") < col("id_b")) ++ Option.when(earlyFilter)(
+      gf.prefilter_pass(col("nos_a"), col("nos_b"), cfg.cutoff))).reduceOption(_ && _)
+    def gated(pairs: DataFrame): DataFrame = keep.fold(pairs)(pairs.where)
+    def small(df: DataFrame): DataFrame =
+      df.join(broadcast(t.oversize), Seq("key"), "left_anti")
+    val (smallA, smallB) =
+      if (self) {
+        val s = small(a).observe("graft_capped_rows", count(lit(1)).as("rows_kept"))
+        (side(s, "a"), side(s, "b"))
+      } else (side(small(a), "a"), side(small(b), "b"))
     // SHUFFLE_HASH: the designed bucketed hash join on blocking keys.
     // A broadcast join here would inherit the (possibly AQE-coalesced,
     // single-partition) left side's parallelism and serialize
     // everything downstream. Pair dedup runs on the 16-byte id pair
     // BEFORE the name strings are joined back — at web scale the
     // duplicate-key traffic is the dominant shuffle.
-    val smallPairs = sideA(small).join(sideB(small).hint("SHUFFLE_HASH"), Seq("key"))
-      .where(keep)
+    val smallPairs = gated(smallA.join(smallB.hint("SHUFFLE_HASH"), Seq("key")))
       .select("id_a", "id_b")
-    // salted tier — 2-D grid: the A side carries salt_m = hash(id) mod
-    // n and is replicated across every salt_b; the B side carries
-    // salt_b and is replicated across every salt_m. An unordered pair
-    // {x,y} appears as (x,y) at cell (salt_m(x), salt_b(y)) and as
-    // (y,x) at (salt_m(y), salt_b(x)); the id_a < id_b filter keeps
-    // exactly one. Per-task work is bounded by maxBlockSize² — the 1-D
-    // scheme's cap × block_size cells (up to 800k pairs at the runaway
-    // bound) were measured as multi-second stragglers on dense
-    // family blocks.
-    val hotKeyed = keyed.join(broadcast(saltPlan(sizes, cfg)), Seq("key"))
-    val hotA = sideA(hotKeyed,
-      pmod(xxhash64(col("id")), col("nsalt")).as("salt_m"),
-      explode(sequence(lit(0L), col("nsalt") - 1)).as("salt_b"))
-    val hotB = sideB(hotKeyed,
-      explode(sequence(lit(0L), col("nsalt") - 1)).as("salt_m"),
-      pmod(xxhash64(col("id")), col("nsalt")).as("salt_b"))
-    val hotPairs = hotA.join(hotB.hint("SHUFFLE_HASH"),
-        Seq("key", "salt_m", "salt_b"))
-      .where(keep)
+    // salted tier — 2-D grid: A rows carry salt_m = hash(id_a) mod nm
+    // and are replicated to every salt_b; B rows carry salt_b =
+    // hash(id_b) mod nb and are replicated to every salt_m, so each
+    // (a, b) meets once, at (salt_m(a), salt_b(b)) (a self join's {x,y}
+    // meets as (x,y) and (y,x); id_a < id_b keeps one). Per-task work is
+    // ≤ maxBlockSize² at replication cost |A|×nb + |B|×nm rows — the 1-D
+    // scheme's cap × block_size cells (800k pairs at the runaway bound)
+    // were multi-second stragglers on dense family blocks.
+    def id(s: String): Column = col(if (self) "id" else s"id_$s")
+    def cells(n: String): Column = explode(sequence(lit(0L), col(n) - 1))
+    val hotA = side(a.join(broadcast(t.grid), Seq("key")), "a",
+      pmod(xxhash64(id("a")), col("nm")).as("salt_m"), cells("nb").as("salt_b"))
+    val hotB = side(b.join(broadcast(t.grid), Seq("key")), "b",
+      cells("nm").as("salt_m"), pmod(xxhash64(id("b")), col("nb")).as("salt_b"))
+    val hotPairs = gated(hotA.join(hotB.hint("SHUFFLE_HASH"),
+        Seq("key", "salt_m", "salt_b")))
       .select("id_a", "id_b")
-      .observe("graft_salted_pairs", count(lit(1)).as("pairs_salted"))
-    smallPairs.unionByName(hotPairs).distinct()
+      .observe(if (self) "graft_salted_pairs" else "graft_salted_pairs_2s",
+        count(lit(1)).as("pairs_salted"))
+    smallPairs.unionByName(hotPairs)
+  }
+
+  /** Distinct (id_a, id_b) self-pairs from a keyed table (id, key) —
+    * the in-plan blocking join ([[tieredPairs]] over `(keyed, keyed)`
+    * with the table's own [[blockSizes]] census, no driver action),
+    * exposed for spec-level recall proofs. With `earlyFilter` the
+    * keyed table must also carry `nosuffix`.
+    */
+  def candidatePairsSelf(keyed0: DataFrame, cfg: Config = Config(),
+      cacheKeyed: Boolean = true, earlyFilter: Boolean = false): DataFrame = {
+    // the keyed table is consumed ~4× below (the census, the shared
+    // small-join input, the grid join's two sides) and each uncached
+    // scan re-evaluates the blocking_keys explode (double-metaphone +
+    // minhash per row — the expensive part). (id, key) rows are ~30
+    // bytes: persist them once. Callers that rebuild per micro-batch
+    // pass cacheKeyed = false and manage caching themselves (a
+    // per-batch CacheManager entry never released would grow without
+    // bound).
+    val keyed = if (cacheKeyed) keyed0.persist() else keyed0
+    tieredPairs(keyed, keyed, selfCensus(blockSizes(keyed)), cfg,
+      earlyFilter, self = true).distinct()
   }
 
   /** Self-join candidate pairs over blocking keys (salted hot keys,
@@ -367,34 +384,28 @@ object Pipeline {
 
   /** Prefilter-fused two-sided candidates — see [[edgeCandidatesSelf]]
     * for the ordering argument; identical output to
-    * `candidatesTwoSided where prefilter_pass`. */
+    * `candidatesTwoSided where prefilter_pass`. A repeated caller
+    * against a FIXED universe (streaming micro-batches) persists
+    * [[baseKeyed]]`(base)` once for the query's lifetime and passes
+    * `cacheInputs = false`: the CacheManager substitutes that entry for
+    * the identical base-side plan here, so the key explode
+    * (double-metaphone + minhash per row, "the expensive part") does
+    * not re-run per batch. */
   def edgeCandidatesTwoSided(main: DataFrame, base: DataFrame,
       cfg: Config = Config(), cacheInputs: Boolean = true): DataFrame = {
     if (cacheInputs) { main.persist(); base.persist() }
-    edgeCandidatesTwoSidedKeyed(main, base, baseKeyed(base), cfg,
-      cacheKeyed = cacheInputs)
+    val keyedM = withBlockingKeys(main)
+      .select(col("key"), col("id").as("id_a"), col("nosuffix").as("nos_a"))
+    attachNames2(candidatePairsTwoSided(keyedM, baseKeyed(base), cfg,
+      cacheKeyed = cacheInputs, earlyFilter = true), main, base, cfg)
   }
 
-  /** The base side's exploded keyed table (key, id_b, nos_b) — exposed
-    * so a repeated caller against a FIXED universe (streaming
-    * micro-batches) can compute + persist it ONCE for the query's
-    * lifetime instead of re-running the key explode (double-metaphone
-    * + minhash per row, "the expensive part") several times per
-    * batch. */
+  /** The base side's exploded keyed table (key, id_b, nos_b) of
+    * [[edgeCandidatesTwoSided]] — exposed so a repeated caller can
+    * persist it once (see there). */
   def baseKeyed(base: DataFrame): DataFrame =
     withBlockingKeys(base)
       .select(col("key"), col("id").as("id_b"), col("nosuffix").as("nos_b"))
-
-  /** [[edgeCandidatesTwoSided]] over a caller-supplied (possibly
-    * pre-persisted) base keyed table from [[baseKeyed]]. */
-  def edgeCandidatesTwoSidedKeyed(main: DataFrame, base: DataFrame,
-      keyedB: DataFrame, cfg: Config = Config(),
-      cacheKeyed: Boolean = false): DataFrame = {
-    val keyedM = withBlockingKeys(main)
-      .select(col("key"), col("id").as("id_a"), col("nosuffix").as("nos_a"))
-    attachNames2(candidatePairsTwoSided(keyedM, keyedB, cfg,
-      cacheKeyed = cacheKeyed, earlyFilter = true), main, base, cfg)
-  }
 
   /** Steady-state incremental ER (the reference's production flow:
     * match_pair.py:47-58 streams chunks against matcher.py:428-430's
@@ -415,37 +426,21 @@ object Pipeline {
     *    [[edgeCandidatesSelf]]).
     * Steady-state cost: O(increment), not O(corpus) —
     * IncrementalErSpec pins the plan shape and the bit-identity of the
-    * edges against [[edgeCandidatesTwoSided]].
-    *
-    * Kept deliberately un-salted: increments are bounded by crawl
-    * cadence, and a pathologically hot increment can fall back to
-    * [[candidatePairsTwoSided]]'s 2-D grid for that batch. Runaway
-    * STANDING keys (census > runawayBlockSize) are dropped via a
-    * broadcast anti-join, mirroring the two-sided path's base-side
-    * runaway drop bit-for-bit. */
+    * edges against [[edgeCandidatesTwoSided]] over a standing table of
+    * `withBlockingKeys(baseNorm)`. `main` is consumed twice (key
+    * explode + hydration probe) — callers persist it. */
   def incrementalEdges(spark: SparkSession, standingTable: String,
-      main: DataFrame, baseNorm: DataFrame, cfg: Config = Config()): DataFrame =
-    // the keyed handle stays persisted: the CacheManager entry is
-    // keyed by the logical plan, so repeated IDENTICAL calls (Bench's
-    // median-of-3 over the same cached `main`) share one entry.
-    // Per-micro-batch callers (distinct `main` per batch) must use
-    // [[incrementalEdgesKeyed]] and release the handle themselves.
-    incrementalEdgesKeyed(spark, standingTable, main, baseNorm, cfg)._1
-
-  /** [[incrementalEdges]] plus the persisted increment-keyed handle —
-    * the blocking-key explode (double-metaphone + minhash per row, the
-    * expensive part) is consumed by BOTH the hot-key census action and
-    * the blocking join; the persist makes it run once per batch
-    * instead of twice (measured in SteadyStateProbe's per-batch
-    * walls). Repeated callers unpersist the handle after the batch's
-    * terminal action. */
-  def incrementalEdgesKeyed(spark: SparkSession, standingTable: String,
-      main: DataFrame, baseNorm: DataFrame,
-      cfg: Config = Config()): (DataFrame, DataFrame) = {
-    assertStandingBucketed(spark, standingTable)
-    val keyedInc = incrementKeyed(main).persist()
-    (scoreCandidates(incrementalCandidatesKeyed(spark, standingTable,
-      keyedInc, main, baseNorm, cfg), cfg), keyedInc)
+      main: DataFrame, baseNorm: DataFrame, cfg: Config = Config()): DataFrame = {
+    // the key explode (the expensive part) feeds both the hot-key check
+    // and the join: persisted, it runs once. The handle stays persisted:
+    // the CacheManager entry is keyed by the logical plan, so repeated
+    // IDENTICAL calls (Bench's median-of-3) share one entry. Per-batch
+    // callers call [[incrementalPairs]] with their own released handle.
+    val keyedInc = withBlockingKeys(main).select("id", "key", "nosuffix").persist()
+    scoreCandidates(attachNames2(
+      incrementalPairs(spark, standingTable, keyedInc, cfg)
+        .observe("graft_incremental_pairs", count(lit(1)).as("pairs_deduped")),
+      main, baseNorm, cfg), cfg)
   }
 
   /** Runtime plan guard (always on — planning is driver-side and
@@ -472,39 +467,19 @@ object Pipeline {
         "in the census probe plan)")
   }
 
-  /** The increment's exploded keyed table (key, id_a, nos_a) — the
-    * per-batch shuffle payload of the incremental join. */
-  def incrementKeyed(main: DataFrame): DataFrame =
-    withBlockingKeys(main)
-      .select(col("key"), col("id").as("id_a"), col("nosuffix").as("nos_a"))
-
-  /** The candidate half of [[incrementalEdges]] — hydrated
-    * (id_a, id_b, pre_a, pre_b, nos_a, nos_b) prefilter-passing pairs
-    * of increment × standing-table rows. Output is bit-identical to
-    * [[edgeCandidatesTwoSided]](main, base) when the standing table
-    * holds `withBlockingKeys(baseNorm)`; only the physical plan
-    * differs (standing side exchange-free). `main` is consumed twice
-    * (key explode + hydration probe) — callers persist it. */
-  def incrementalCandidates(spark: SparkSession, standingTable: String,
-      main: DataFrame, baseNorm: DataFrame, cfg: Config = Config()): DataFrame =
-    incrementalCandidatesKeyed(spark, standingTable, incrementKeyed(main),
-      main, baseNorm, cfg)
-
-  /** [[incrementalCandidates]] over a caller-supplied (typically
-    * persisted) increment-keyed table from [[incrementKeyed]]. */
-  def incrementalCandidatesKeyed(spark: SparkSession, standingTable: String,
-      keyedInc: DataFrame, main: DataFrame, baseNorm: DataFrame,
-      cfg: Config = Config()): DataFrame =
-    attachNames2(
-      incrementalPairs(spark, standingTable, keyedInc, cfg)
-        .observe("graft_incremental_pairs",
-          count(lit(1)).as("pairs_deduped")),
-      main, baseNorm, cfg)
-
-  /** The raw deduped (id_a = increment id, id_b = standing id)
-    * prefilter-passing pair set of the incremental blocking join —
-    * exposed un-hydrated so the absorb path ([[Absorb]]) can
-    * canonicalize pair order before hydration.
+  /** The deduped, prefilter-passing (id_a = increment id, id_b =
+    * standing id) pairs of a keyed increment (id, key, nosuffix) against
+    * the bucketed standing table ([[assertStandingBucketed]]) —
+    * un-hydrated so [[Absorb]] can canonicalize pair order first.
+    *
+    * The tier exception of the [[Pipeline]] scaladoc: a key cold in the
+    * increment joins bucket-locally. A hot one would put its whole
+    * |inc_k| × |standing_k| product (standing factor runaway-bounded,
+    * increment factor not) in one bucket task, so it goes through the
+    * [[tieredPairs]] grid, shuffling only its standing rows. The hot-key
+    * set stays in the plan as a broadcast census frame; the driver only
+    * asks whether it is empty. With no hot key (the steady-state norm)
+    * the plan is EXACTLY the single bucket join.
     *
     * `runawayKeys`: standing-census runaways by default (bit-identical
     * to [[candidatePairsTwoSided]]'s base-side drop); the absorb path
@@ -513,136 +488,57 @@ object Pipeline {
   def incrementalPairs(spark: SparkSession, standingTable: String,
       keyedInc: DataFrame, cfg: Config = Config(),
       runawayKeys: Option[DataFrame] = None): DataFrame = {
+    assertStandingBucketed(spark, standingTable)
     val standing = spark.table(standingTable)
     // runaway census over the bucketed scan: groupBy(key) is satisfied
     // by the table's bucket distribution — no exchange
-    val runaway = runawayKeys.getOrElse(
-      standing.groupBy("key")
-        .agg(count(lit(1)).as("block_size"))
-        .where(col("block_size") > cfg.runawayBlockSize)
-        .select("key"))
-    val b = standing.join(broadcast(runaway), Seq("key"), "left_anti")
-      .select(col("key"), col("id").as("id_b"), col("nosuffix").as("nos_b"))
-    val a = keyedInc.join(broadcast(runaway), Seq("key"), "left_anti")
-    // hot-increment fallback (closes the "pathologically hot increment
-    // falls back manually" note): a key whose INCREMENT block exceeds
-    // maxBlockSize would land its whole |inc_k| × |standing_k| product
-    // in one bucket task (the standing factor is runaway-bounded, the
-    // increment factor is not). Census the increment driver-side —
-    // O(increment) and tiny — and only when hot keys exist, split the
-    // plan: cold keys keep the exchange-free bucket join; hot keys
-    // route through candidatePairsTwoSided's 2-D grid, shuffling only
-    // those keys' standing rows (≤ hot × runawayBlockSize). With no
-    // hot keys (the steady-state norm) the plan is EXACTLY the
-    // single-join one — no second corpus scan, no empty grid branch.
-    val hotKeys = a.groupBy("key").agg(count(lit(1)).as("bs_m"))
-      .where(col("bs_m") > cfg.maxBlockSize)
-      .select("key").as[String](org.apache.spark.sql.Encoders.STRING)
-      .take(10001)
-    if (hotKeys.isEmpty) {
-      b.join(a, Seq("key"))
-        .where(gf.prefilter_pass(col("nos_a"), col("nos_b"), cfg.cutoff))
-        .select("id_a", "id_b")
+    val runaway = broadcast(runawayKeys.getOrElse(
+      tiers(selfCensus(blockSizes(standing)), cfg).runaway))
+    def side(df: DataFrame, s: String): DataFrame =
+      df.join(runaway, Seq("key"), "left_anti")
+        .select(col("key"), col("id").as(s"id_$s"), col("nosuffix").as(s"nos_$s"))
+    val (a, b) = (side(keyedInc, "a"), side(standing, "b"))
+    def bucketJoin(inc: DataFrame): DataFrame = b.join(inc, Seq("key"))
+      .where(gf.prefilter_pass(col("nos_a"), col("nos_b"), cfg.cutoff))
+      .select("id_a", "id_b")
+    // the increment's oversize keys, the standing side not counted
+    val hot = broadcast(tiers(blockSizes(a)
+      .select(col("key"), col("block_size").as("bs_a"), lit(0L).as("bs_b")), cfg).oversize)
+    if (hot.isEmpty) bucketJoin(a).distinct()
+    else {
+      val (hotA, hotB) = (a.join(hot, Seq("key"), "left_semi"),
+        b.join(hot, Seq("key"), "left_semi"))
+      bucketJoin(a.join(hot, Seq("key"), "left_anti"))
+        .unionByName(tieredPairs(hotA, hotB, twoSidedCensus(hotA, hotB), cfg,
+          earlyFilter = true, self = false))
         .distinct()
-    } else if (hotKeys.length > 10000) {
-      // a batch with >10k hot keys is not an increment in any
-      // meaningful sense — escape to the full two-sided path (corpus
-      // subset shuffles; correct, never a single-task product)
-      System.err.println("[graft-inc] WARNING: batch has >10000 hot " +
-        "keys; routing the whole batch through candidatePairsTwoSided")
-      candidatePairsTwoSided(a, b, cfg, cacheKeyed = false,
-        earlyFilter = true)
-    } else {
-      System.err.println(s"[graft-inc] ${hotKeys.length} hot increment " +
-        s"keys (> ${cfg.maxBlockSize} rows); 2-D-grid scoring them " +
-        "against their standing rows")
-      val hot = broadcast(
-        spark.createDataset(hotKeys.toSeq)(
-          org.apache.spark.sql.Encoders.STRING).toDF("key"))
-      val cold = b.join(a.join(hot, Seq("key"), "left_anti"), Seq("key"))
-        .where(gf.prefilter_pass(col("nos_a"), col("nos_b"), cfg.cutoff))
-        .select("id_a", "id_b")
-      val gridded = candidatePairsTwoSided(
-        a.join(hot, Seq("key"), "left_semi"),
-        b.join(hot, Seq("key"), "left_semi"),
-        cfg, cacheKeyed = false, earlyFilter = true,
-        // the union's terminal distinct below dedups BOTH branches —
-        // a second distinct inside the grid path would stack a full
-        // extra exchange+agg over ~90% of the pair volume
-        dedup = false)
-      cold.unionByName(gridded).distinct()
     }
   }
 
-  /** Distinct (id_a, id_b) main × base pairs from two keyed tables —
-    * census on BOTH sides (at web scale the MAIN side is the huge
-    * mention table, so main-hot keys are the norm, not the exception;
-    * a base-only census would land a hot main key's whole
-    * |main_k|×|base_k| product in one task).
-    *
-    * Tiers per key:
-    *  - both sides ≤ maxBlockSize: plain SHUFFLE_HASH join;
-    *  - either side hot (and base ≤ runawayBlockSize): 2-D GRID SALT —
-    *    main rows carry salt_m = hash(id_a) mod nm and are replicated
-    *    to every salt_b; base rows carry salt_b = hash(id_b) mod nb
-    *    and are replicated to every salt_m; the join runs on
-    *    (key, salt_m, salt_b), so each pair meets exactly once at
-    *    (salt_m(a), salt_b(b)) and per-task work is bounded by
-    *    maxBlockSize² regardless of EITHER side's block size.
-    *    Replication cost is main×nb + base×nm rows — linear in each
-    *    side, never quadratic;
-    *  - base > runawayBlockSize: dropped, counted, logged (a universe
-    *    block that big is a stop-word-like artifact; the main side has
-    *    no runaway bound — big main keys are real data). */
+  /** A two-sided census (key, bs_a, bs_b): each side's [[blockSizes]],
+    * 0 where a side lacks the key. */
+  private def twoSidedCensus(a: DataFrame, b: DataFrame): DataFrame =
+    blockSizes(a).withColumnRenamed("block_size", "bs_a")
+      .join(blockSizes(b).withColumnRenamed("block_size", "bs_b"),
+        Seq("key"), "full_outer")
+      .na.fill(0L, Seq("bs_a", "bs_b"))
+
+  /** Distinct (id_a, id_b) main × base pairs from two keyed tables
+    * (key, id_a, …) and (key, id_b, …) — [[tieredPairs]] with a census
+    * on BOTH sides (at web scale the MAIN side is the huge mention
+    * table, so main-hot keys are the norm, not the exception; a
+    * base-only census would land a hot main key's whole |main_k|×|base_k|
+    * product in one task). */
   def candidatePairsTwoSided(keyedM0: DataFrame, keyedB0: DataFrame,
       cfg: Config = Config(), cacheKeyed: Boolean = true,
-      earlyFilter: Boolean = false, dedup: Boolean = true): DataFrame = {
+      earlyFilter: Boolean = false): DataFrame = {
     // see candidatePairsSelf: the keyed sides are multiply consumed
     // (census + small join + hot join on each side) and every uncached
     // scan re-runs the blocking_keys explode
     val keyedM = if (cacheKeyed) keyedM0.persist() else keyedM0
     val keyedB = if (cacheKeyed) keyedB0.persist() else keyedB0
-    val cap = cfg.maxBlockSize
-    val sizesB = keyedB.groupBy("key").agg(count(lit(1)).as("bs_b"))
-    val sizesM = keyedM.groupBy("key").agg(count(lit(1)).as("bs_m"))
-    // (key, nm, nb) for keys needing the grid; keys with a runaway
-    // base block are excluded here AND from the small tier → dropped
-    val grid = sizesB.join(sizesM, Seq("key"))
-      .where(col("bs_b") <= cfg.runawayBlockSize &&
-        (col("bs_b") > cap || col("bs_m") > cap))
-      .select(col("key"),
-        ceil(col("bs_m").cast("double") / cap).cast("long").as("nm"),
-        ceil(col("bs_b").cast("double") / cap).cast("long").as("nb"))
-    val oversize = sizesB.where(col("bs_b") > cap).select("key")
-      .unionByName(sizesM.where(col("bs_m") > cap).select("key")).distinct()
-    def gated(pairs: DataFrame): DataFrame =
-      if (earlyFilter)
-        pairs.where(gf.prefilter_pass(col("nos_a"), col("nos_b"), cfg.cutoff))
-      else pairs
-    val smallPairs = gated(keyedM
-      .join(broadcast(oversize), Seq("key"), "left_anti")
-      .join(keyedB.join(broadcast(oversize), Seq("key"), "left_anti")
-        .hint("SHUFFLE_HASH"), Seq("key")))
-      .select("id_a", "id_b")
-    val hotM = keyedM.join(broadcast(grid), Seq("key"))
-      .select(keyedM.columns.filter(_ != "key").map(col) ++ Seq(col("key"),
-        pmod(xxhash64(col("id_a")), col("nm")).as("salt_m"),
-        explode(sequence(lit(0L), col("nb") - 1)).as("salt_b")): _*)
-    val hotB = keyedB.join(broadcast(grid), Seq("key"))
-      .select(keyedB.columns.filter(_ != "key").map(col) ++ Seq(col("key"),
-        explode(sequence(lit(0L), col("nm") - 1)).as("salt_m"),
-        pmod(xxhash64(col("id_b")), col("nb")).as("salt_b")): _*)
-    val hotPairs = gated(hotM.join(hotB.hint("SHUFFLE_HASH"),
-        Seq("key", "salt_m", "salt_b")))
-      .select("id_a", "id_b")
-      .observe("graft_salted_pairs_2s", count(lit(1)).as("pairs_salted"))
-    // `dedup = false` hands the pair dedup to the CALLER's terminal
-    // distinct (the incremental hot-key route unions this output with
-    // its cold branch and must dedup across the union anyway — two
-    // stacked distincts cost a full extra exchange+agg over the pair
-    // set, 9.2 s of the r7-baseline er_incremental wall; guide §2.4)
-    val u = smallPairs.unionByName(hotPairs)
-    if (dedup) u.distinct() else u
+    tieredPairs(keyedM, keyedB, twoSidedCensus(keyedM, keyedB), cfg,
+      earlyFilter, self = false).distinct()
   }
 
   /** Prefilter + cascade over candidate pairs → accepted edges with

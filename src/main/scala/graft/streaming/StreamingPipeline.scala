@@ -70,7 +70,7 @@ object StreamingPipeline {
     * semantics ≡ the batch pipeline on the same input. */
   def matchBatch(batch: DataFrame, baseNorm: DataFrame): DataFrame =
     matchNormalized(graft.pipeline.Pipeline.normalize(batchMentions(batch)),
-      baseNorm, graft.pipeline.Pipeline.baseKeyed(baseNorm))
+      baseNorm)
 
   /** batch pages → (id, name) mention rows (id = stable hash of the
     * url + extracted line, deterministic under batch replay). */
@@ -81,10 +81,9 @@ object StreamingPipeline {
       .select(xxhash64(col("url"), col("line")).as("id"),
         expr("substring(line, 10)").as("name"))
 
-  private def matchNormalized(main: DataFrame, baseNorm: DataFrame,
-      keyedB: DataFrame): DataFrame =
-    graft.pipeline.Pipeline.scoreCandidates(
-        graft.pipeline.Pipeline.edgeCandidatesTwoSidedKeyed(main, baseNorm, keyedB))
+  private def matchNormalized(main: DataFrame, baseNorm: DataFrame): DataFrame =
+    graft.pipeline.Pipeline.scoreCandidates(graft.pipeline.Pipeline
+        .edgeCandidatesTwoSided(main, baseNorm, cacheInputs = false))
       .select("id_a", "id_b", "code", "score")
 
   def incrementalEdges(spark: SparkSession, pagesDir: String,
@@ -95,9 +94,10 @@ object StreamingPipeline {
     // no unpersist would grow the shared CacheManager unboundedly).
     // The keyed explode (double-metaphone + minhash per base row) is
     // the expensive part: without its own persist it re-executes for
-    // the census and both join tiers on EVERY micro-batch.
+    // the census and both join tiers on EVERY micro-batch. The batch
+    // plans pick the keyed entry up from the CacheManager (same plan).
     baseNorm.persist()
-    val keyedB = graft.pipeline.Pipeline.baseKeyed(baseNorm).persist()
+    graft.pipeline.Pipeline.baseKeyed(baseNorm).persist()
     spark.readStream
       .schema("url STRING, warc_ts TIMESTAMP, html BINARY, text STRING, lang STRING")
       .parquet(pagesDir)
@@ -110,7 +110,7 @@ object StreamingPipeline {
         // for the batch, release in finally — the cache must not
         // accumulate an entry per micro-batch
         val main = graft.pipeline.Pipeline.normalize(batchMentions(batch)).persist()
-        try matchNormalized(main, baseNorm, keyedB)
+        try matchNormalized(main, baseNorm)
           .write.mode("overwrite").parquet(s"$edgesDir/batch=$batchId")
         finally main.unpersist()
         ()
@@ -126,10 +126,10 @@ object StreamingPipeline {
     * a full corpus re-key + re-shuffle); here the keyed corpus lives
     * ON DISK with its bucket layout, so every micro-batch — including
     * the first after a crash — shuffles only the increment
-    * (Pipeline.incrementalCandidates; IncrementalErSpec pins the
-    * plan). `baseNorm` is still needed for name hydration of accepted
-    * pairs; it is cheap to recompute relative to the keyed explode and
-    * is persisted for the query lifetime. */
+    * (Pipeline.incrementalPairs; IncrementalErSpec pins the plan).
+    * `baseNorm` is still needed for name hydration of accepted pairs;
+    * it is cheap to recompute relative to the keyed explode and is
+    * persisted for the query lifetime. */
   def incrementalEdgesBucketed(spark: SparkSession, pagesDir: String,
       standingTable: String, baseNorm: DataFrame, edgesDir: String,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
@@ -145,9 +145,11 @@ object StreamingPipeline {
         // keyed handle released per batch: each micro-batch's `main` is
         // a distinct plan, so the plain incrementalEdges persist would
         // accumulate one CacheManager entry per batch forever
-        val (edges, keyedInc) = graft.pipeline.Pipeline
-          .incrementalEdgesKeyed(spark, standingTable, main, baseNorm)
-        try edges
+        val keyedInc = graft.pipeline.Pipeline.withBlockingKeys(main)
+          .select("id", "key", "nosuffix").persist()
+        try graft.pipeline.Pipeline.scoreCandidates(graft.pipeline.Pipeline.attachNames2(
+            graft.pipeline.Pipeline.incrementalPairs(spark, standingTable, keyedInc),
+            main, baseNorm))
           .select("id_a", "id_b", "code", "score")
           .write.mode("overwrite").parquet(s"$edgesDir/batch=$batchId")
         finally { keyedInc.unpersist(); main.unpersist() }

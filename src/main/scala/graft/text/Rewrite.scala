@@ -42,7 +42,7 @@ final class Rewrite(rules: Seq[(String, String)]) extends Serializable {
   private final case class Compiled(
       pattern: Pattern,
       replacement: String, // " " + target, already quoted for appendReplacement
-      requiredLit: String, // lowercase literal that must occur, or null
+      requiredLit: String, // folded literal that must occur, or null
       collapse: Pattern,   // null when target is blank
       collapseRepl: String,
       collapseLit: String) // raw target (case-sensitive guard), or null
@@ -63,9 +63,9 @@ final class Rewrite(rules: Seq[(String, String)]) extends Serializable {
 
   def apply(name0: String): String = {
     var name = name0
-    // lowercase shadow for the case-insensitive literal guards,
+    // case-folded shadow for the case-insensitive literal guards,
     // recomputed only when a fired rule actually changed the string
-    var ln = name.toLowerCase(Locale.ROOT)
+    var ln = Rewrite.fold(name)
     var i = 0
     while (i < compiled.length) {
       val r = compiled(i)
@@ -80,14 +80,40 @@ final class Rewrite(rules: Seq[(String, String)]) extends Serializable {
       }
       if (r.collapse != null && name.contains(r.collapseLit))
         name = r.collapse.matcher(name).replaceAll(r.collapseRepl)
-      if (name ne prev) ln = name.toLowerCase(Locale.ROOT)
+      if (name ne prev) ln = Rewrite.fold(name)
       i += 1
     }
     name.replace("  ", " ").strip().toLowerCase(Locale.ROOT)
   }
+
+  /** Per rule: its compiled pattern and whether its literal guard lets
+    * `name` through — the guard-soundness probe of RewriteGuardSpec. */
+  private[text] def guards(name: String): Seq[(Pattern, Boolean)] = {
+    val ln = Rewrite.fold(name)
+    compiled.toSeq.map(r => (r.pattern, r.requiredLit == null || ln.contains(r.requiredLit)))
+  }
 }
 
 object Rewrite {
+  /** The case folding `java.util.regex` applies to each char under
+    * CASE_INSENSITIVE | UNICODE_CASE: toLowerCase(toUpperCase(c)).
+    * Length-preserving, unlike `String.toLowerCase` (full case mapping
+    * turns 'İ' into "i̇", two chars), and it maps 'İ', 'ı' → 'i',
+    * 'ſ' → 's', 'K' (Kelvin) → 'k' as the regex does — so a guard
+    * literal is found in the folded name whenever the pattern matches. */
+  private[text] def fold(s: String): String = {
+    val cs = s.toCharArray
+    var i = 0
+    while (i < cs.length) {
+      val c = cs(i)
+      cs(i) =
+        if (c < 0x80) { if (c >= 'A' && c <= 'Z') (c + 32).toChar else c }
+        else Character.toLowerCase(Character.toUpperCase(c))
+      i += 1
+    }
+    new String(cs)
+  }
+
   /** abbr_adj = hardcode + abbr1 + abbr2 (_abbr.py:333). */
   lazy val abbrAdj: Rewrite =
     new Rewrite(AbbrTables.hardcode ++ AbbrTables.abbr)
@@ -100,8 +126,8 @@ object Rewrite {
     * '[', braces) or when the best run is shorter than 2 chars. A char
     * immediately followed by a quantifier ('?', '*', '{') is dropped
     * from its run (it may repeat zero times); '+' keeps the char (one
-    * occurrence is required) but ends the run. Lowercased to match the
-    * CASE_INSENSITIVE semantics (guard checks a lowercased name). */
+    * occurrence is required) but ends the run. Folded ([[fold]]) to
+    * match the CASE_INSENSITIVE semantics (guard checks a folded name). */
   private[text] def requiredLiteral(pat: String): String = {
     if (pat.contains("|") || pat.contains("[") || pat.contains("{")) return null
     val runs = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -138,6 +164,6 @@ object Rewrite {
     }
     endRun()
     val best = runs.sortBy(-_.length).headOption.getOrElse("")
-    if (best.length >= 2) best.toLowerCase(Locale.ROOT) else null
+    if (best.length >= 2) fold(best) else null
   }
 }

@@ -1,16 +1,15 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
-import graft.expr.{functions => gf}
 import graft.pipeline.Pipeline
 
 /** Round-7 probe: split er_incremental's wall into its phases —
-  * increment keying, the hot-key census, the cold (bucketed) branch,
-  * the 2-D-grid hot branch, pair dedup, and the hydrated cascade —
-  * to locate why the incremental path ran 3.7× er_match's wall on the
-  * same edge set (r7 baseline: 52.7 s vs 14.4 s). */
+  * increment keying, the incremental blocking join (hot-key check,
+  * bucket join, grid route for increment-hot keys, pair dedup), and
+  * the hydrated cascade — to locate why the incremental path ran 3.7×
+  * er_match's wall on the same edge set (r7 baseline: 52.7 s vs
+  * 14.4 s). */
 object IncProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
@@ -37,39 +36,16 @@ object IncProfile {
     t("base-norm")(println("  rows=" + baseNorm.count()))
     val table = t("standing-ensure")(
       graft.SparkEntry.standingTableFor(spark, sfDir, baseNorm))
-    val keyedInc = Pipeline.incrementKeyed(main).persist()
+    val keyedInc = Pipeline.withBlockingKeys(main)
+      .select("id", "key", "nosuffix").persist()
     t("keyedInc")(println("  rows=" + keyedInc.count()))
 
-    val standing = spark.table(table)
-    val runaway = standing.groupBy("key")
-      .agg(count(lit(1)).as("block_size"))
-      .where(col("block_size") > cfg.runawayBlockSize)
-      .select("key")
-    val b = standing.join(broadcast(runaway), Seq("key"), "left_anti")
-      .select(col("key"), col("id").as("id_b"), col("nosuffix").as("nos_b"))
-    val a = keyedInc.join(broadcast(runaway), Seq("key"), "left_anti")
-    val hotKeys = t("hot-census-take")(
-      a.groupBy("key").agg(count(lit(1)).as("bs_m"))
-        .where(col("bs_m") > cfg.maxBlockSize)
-        .select("key").as[String](org.apache.spark.sql.Encoders.STRING)
-        .take(10001))
-    println("  hotKeys=" + hotKeys.length)
-    val hot = broadcast(
-      spark.createDataset(hotKeys.toSeq)(
-        org.apache.spark.sql.Encoders.STRING).toDF("key"))
-    val cold = b.join(a.join(hot, Seq("key"), "left_anti"), Seq("key"))
-      .where(gf.prefilter_pass(col("nos_a"), col("nos_b"), cfg.cutoff))
-      .select("id_a", "id_b")
-    t("cold-branch-raw")(println("  rows=" + cold.count()))
-    val gridded = Pipeline.candidatePairsTwoSided(
-      a.join(hot, Seq("key"), "left_semi"),
-      b.join(hot, Seq("key"), "left_semi"),
-      cfg, cacheKeyed = false, earlyFilter = true)
-    t("grid-branch")(println("  rows=" + gridded.count()))
-    val pairs = cold.unionByName(gridded).distinct()
+    // planning runs the hot-key check (one O(increment) job)
+    val pairs = t("hot-key-check")(
+      Pipeline.incrementalPairs(spark, table, keyedInc, cfg))
     t("pairs-distinct")(println("  rows=" + pairs.count()))
     val edges = Pipeline.scoreCandidates(
-      graft.pipeline.Pipeline.attachNames2(pairs, main, baseNorm, cfg), cfg)
+      Pipeline.attachNames2(pairs, main, baseNorm, cfg), cfg)
     t("cascade+hydrate")(println("  rows=" + edges.count()))
     // the full query, as Bench times it
     t("full-query")(println("  rows=" +

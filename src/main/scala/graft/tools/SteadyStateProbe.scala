@@ -16,7 +16,7 @@ import graft.pipeline.Pipeline
   *     scans in place, zero corpus exchange, census satisfied by the
   *     bucket layout;
   *   - `plain` — the SAME keyed corpus persisted as plain (unbucketed)
-  *     parquet, joined via [[Pipeline.edgeCandidatesTwoSidedKeyed]]:
+  *     parquet, joined via [[Pipeline.candidatePairsTwoSided]]:
   *     the key explode is amortized, but every batch re-exchanges the
   *     corpus (census + join) — what a disk-resident corpus without
   *     bucket metadata costs;
@@ -127,6 +127,14 @@ object SteadyStateProbe {
       .write.mode("overwrite").parquet(plainPath)
     mark("build_plain_keyed(one-time)", tPlain)
 
+    // the two-sided edge count against a given base keyed table
+    // (key, id_b, nos_b); the increment side re-keys per call
+    def twoSidedEdges(keyedB: org.apache.spark.sql.DataFrame): Long =
+      Pipeline.scoreCandidates(Pipeline.attachNames2(
+        Pipeline.candidatePairsTwoSided(Pipeline.withBlockingKeys(incNorm)
+            .select(col("key"), col("id").as("id_a"), col("nosuffix").as("nos_a")),
+          keyedB, cacheKeyed = false, earlyFilter = true),
+        incNorm, baseNorm)).count()
     val counts = scala.collection.mutable.Map[String, Long]()
     def timed(label: String)(edges: => Long): Unit = {
       drainBus()
@@ -146,13 +154,11 @@ object SteadyStateProbe {
         Pipeline.incrementalEdges(spark, table, incNorm, baseNorm).count()
       }
       timed(s"plain_sample$sample") {
-        Pipeline.scoreCandidates(Pipeline.edgeCandidatesTwoSidedKeyed(
-          incNorm, baseNorm, spark.read.parquet(plainPath))).count()
+        twoSidedEdges(spark.read.parquet(plainPath))
       }
       timed(s"rekey_sample$sample") {
         val kb = Pipeline.baseKeyed(baseNorm).persist()
-        try Pipeline.scoreCandidates(Pipeline.edgeCandidatesTwoSidedKeyed(
-          incNorm, baseNorm, kb)).count()
+        try twoSidedEdges(kb)
         finally kb.unpersist(blocking = true)
       }
     }

@@ -58,8 +58,10 @@ class IncrementalErSpec extends SparkSuite {
       BucketedKeyTable.ensure(spark, "graft_standing_spec2", 8, dir) {
         Pipeline.withBlockingKeys(base).select("id", "key", "nosuffix")
       }
-      val cand = Pipeline.incrementalCandidates(
-        spark, "graft_standing_spec2", main, base)
+      val cand = Pipeline.attachNames2(Pipeline.incrementalPairs(spark,
+          "graft_standing_spec2",
+          Pipeline.withBlockingKeys(main).select("id", "key", "nosuffix")),
+        main, base)
       val plan = cand.queryExecution.executedPlan.toString
       // expected hash exchanges: the increment side of the blocking
       // join + the pair dedup. (attachNames2's fan-out repartition is
@@ -93,7 +95,7 @@ class IncrementalErSpec extends SparkSuite {
   test("hot-increment keys route through the 2-D grid with identical edges") {
     // maxBlockSize=2 makes nearly every increment key "hot": the
     // fallback must split the plan (cold keys on the bucket join, hot
-    // keys through candidatePairsTwoSided's grid) and still produce
+    // keys through the two-sided 2-D grid) and still produce
     // the exact edge set of the one-join path / two-sided reference
     val (main, base) = corpus()
     val cfg = Pipeline.Config(maxBlockSize = 2)

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.block.BucketedKeyTable
 import graft.cluster.ConnectedComponents
 import graft.pipeline.Pipeline
 
@@ -83,6 +84,85 @@ class SaltingPropertySpec extends SparkSuite {
       assert(got == want, s"seed=$seed " +
         s"lost=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
     }
+  }
+
+  test("weighted self pairs: tiers follow summed w, ≡ brute force over 10 random skews") {
+    // name-level keyed tables carry w = mentions per name: block sizes
+    // are the SUM of w, so a key of few rows can be salted or dropped
+    val nos = Vector("acme holdings", "acme holding", "zeta labs")
+    for (seed <- 401 to 410) {
+      val rnd = new scala.util.Random(seed)
+      val rows = randomKeyed(rnd)
+      val ids = rows.map(_._1).distinct
+      val w = ids.map(_ -> (1 + rnd.nextInt(3)).toLong).toMap
+      val nosOf = ids.map(_ -> nos(rnd.nextInt(nos.size))).toMap
+      val keyed = rows.map { case (id, k) => (id, k, w(id), nosOf(id)) }
+        .toDF("id", "key", "w", "nosuffix")
+      val weighted = rows.groupBy(_._2).map { case (k, rs) => k -> rs.map(r => w(r._1)).sum }
+      val want = (for {
+        (k, grp) <- rows.groupBy(_._2).toSeq if weighted(k) <= cfg.runawayBlockSize
+        ids = grp.map(_._1)
+        a <- ids; b <- ids if a < b
+      } yield (a, b)).toSet
+      val got = Pipeline.candidatePairsSelf(keyed, cfg, cacheKeyed = false)
+        .as[(Long, Long)].collect().toSet
+      assert(got == want, s"seed=$seed weighted=$weighted " +
+        s"lost=${(want -- got).take(3).toSeq} extra=${(got -- want).take(3).toSeq}")
+      val gotFused = Pipeline.candidatePairsSelf(keyed, cfg, cacheKeyed = false,
+        earlyFilter = true).as[(Long, Long)].collect().toSet
+      assert(gotFused == want.filter { case (a, b) => passes(nosOf(a), nosOf(b)) },
+        s"seed=$seed: fused self pairs ≠ brute force ∘ prefilter")
+    }
+  }
+
+  private def passes(a: String, b: String): Boolean =
+    graft.score.Fuzz.tokenSetRatio(a, b) > cfg.cutoff
+
+  test("incremental pairs: bucket join + increment-hot grid ≡ brute force, both runaway censuses") {
+    val nos = Vector("acme holdings", "acme holding", "zeta labs")
+    val dir = java.nio.file.Files.createTempDirectory("graft_salting_inc").toString
+    try for (seed <- 301 to 308) {
+      val rnd = new scala.util.Random(seed)
+      val standing = randomKeyed(rnd)
+      val keys = standing.map(_._2).distinct :+ "fresh"
+      // increment blocks per key: cold (≤ cap) or hot in the increment
+      // (cap+1 .. 3·cap; a hot block on a key near the runaway bound
+      // pushes the combined census over it); seeds ≡ 0 mod 4 stay cold
+      var nextId = 1000000L
+      val inc = keys.flatMap { k =>
+        val hot = seed % 4 != 0 && rnd.nextBoolean()
+        val size = if (hot) cfg.maxBlockSize + 1 + rnd.nextInt(2 * cfg.maxBlockSize)
+          else 1 + rnd.nextInt(cfg.maxBlockSize)
+        (0 until size).map { _ => nextId += 1; (nextId, k) }
+      }
+      val ids = (standing ++ inc).map(_._1).distinct
+      val nosOf = ids.map(_ -> nos(rnd.nextInt(nos.size))).toMap
+      def keyed(rows: Seq[(Long, String)]) =
+        rows.map { case (id, k) => (id, k, nosOf(id)) }.toDF("id", "key", "nosuffix")
+      val table = s"graft_salting_inc_$seed"
+      BucketedKeyTable.write(keyed(standing), table, 4, s"$dir/$seed")
+      val sizeS = standing.groupBy(_._2).map { case (k, rs) => k -> rs.size }
+      val sizeI = inc.groupBy(_._2).map { case (k, rs) => k -> rs.size }
+      def want(runaway: String => Boolean) = (for {
+        (k, aGrp) <- inc.groupBy(_._2).toSeq if !runaway(k)
+        a <- aGrp.map(_._1); b <- standing.filter(_._2 == k).map(_._1)
+        if passes(nosOf(a), nosOf(b))
+      } yield (a, b)).toSet
+      val combined = keys.map(k => (k, sizeS.getOrElse(k, 0) + sizeI.getOrElse(k, 0)))
+        .toDF("key", "n")
+      for ((runawayKeys, isRunaway) <- Seq(
+          (None, (k: String) => sizeS.getOrElse(k, 0) > cfg.runawayBlockSize),
+          (Some(combined.where($"n" > cfg.runawayBlockSize).select("key")),
+            (k: String) => sizeS.getOrElse(k, 0) + sizeI(k) > cfg.runawayBlockSize))) {
+        val got = Pipeline.incrementalPairs(spark, table, keyed(inc), cfg, runawayKeys)
+          .as[(Long, Long)].collect().toSet
+        val w = want(isRunaway)
+        assert(got == w, s"seed=$seed combined=${runawayKeys.isDefined} " +
+          s"standing=$sizeS increment=$sizeI " +
+          s"lost=${(w -- got).take(3).toSeq} extra=${(got -- w).take(3).toSeq}")
+      }
+    } finally (301 to 308).foreach(seed =>
+      spark.sql(s"DROP TABLE IF EXISTS graft_salting_inc_$seed"))
   }
 
   test("connected components ≡ union-find over 8 random graphs") {
